@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # cap the bench JVM heap: at sf0.1 every query fits comfortably, and a
-# 48g ceiling just means GC never runs hard and peak RSS balloons to the
+# large ceiling just means GC never runs hard and peak RSS balloons to the
 # heap size; 16g keeps the measured footprint honest (overridable)
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
 

@@ -1,13 +1,33 @@
 """Transitive clustering: connected components over the match-pair graph.
 
 The reference stops at candidate pairs (it never clusters); the north rule
-adds transitive clustering. Implementation: alternating large-star /
-small-star contraction (Kiveris et al., "Connected Components in MapReduce
-and Beyond", SoCC'14) expressed as DataFrame joins — the only iterative
-physical pattern in the engine (SURVEY.md §4.2).
+adds transitive clustering. Two regimes, split on the cleaned edge count
+(self-loops and null endpoints dropped, duplicates removed unless the
+caller vouches for distinct input):
 
-Driver-coordination budget (the part that anti-scaled at 4 executors in
-round 2): per checkpoint cadence the loop now runs
+* **at most ``_LOCAL_MAX_EDGES`` edges (1M)** — one bounded collect of the
+  edge list (``limit(cap + 1)``, the ``score_pairs`` probe pattern) and a
+  union-find on the driver (path halving, union by smaller root, so every
+  root is its component's minimum id). The assignment comes back as a local
+  DataFrame. One or two Spark jobs instead of ~40: at ER sizes the star loop
+  is all fixed per-job cost, and the streaming merge runs it every epoch.
+  The cap bounds the driver, not the speed-up: 1M edges are ~400 MB of
+  driver Python and ~15 s on 4 cores, and it is the same number as
+  ``score_pairs``' ``broadcast_rows`` default. Past it the loop's per-job
+  cost is small next to its executor work, and the edge table may not fit
+  a driver at all (the 1M-entity anchor's 1.13M match edges stay on the
+  loop).
+* **over the cap** — alternating large-star / small-star contraction
+  (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  SoCC'14) expressed as DataFrame joins — the only iterative physical
+  pattern in the engine (SURVEY.md §4.2). Over the cap the bounded probe
+  costs one extra pass over the edges.
+
+Both regimes label a component by its minimum id, so they return the same
+assignment with the same schema.
+
+Star-loop driver-coordination budget (the part that anti-scaled at 4
+executors in round 2): per checkpoint cadence the loop now runs
 
 * ``rounds_per_checkpoint`` large+small star rounds per lineage cut
   (each round references its input ~12x, so k rounds between cuts grow the
@@ -25,15 +45,21 @@ round 2): per checkpoint cadence the loop now runs
 On a production cluster swap ``localCheckpoint`` for reliable checkpoints so
 the loop survives executor loss; cadence and hygiene are unchanged.
 
-Converges in O(log^2 n) rounds; each round is two (groupBy-min + join)
-passes. Cluster ids are the minimum doc_id of the component (deterministic,
-independent of partitioning — tested at local[2] vs local[8]).
+The loop converges in O(log^2 n) rounds; each round is two (groupBy-min +
+join) passes. Cluster ids are the minimum doc_id of the component
+(deterministic, independent of partitioning — tested at local[2] vs
+local[8]).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
+
+# edge-count cap of the driver-side union-find (see the module docstring);
+# tests patch it to 0 to force the star loop
+_LOCAL_MAX_EDGES = 1_000_000
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -96,6 +122,54 @@ def _unpersist_ids(sc, ids: set[int]) -> None:
             m[rid].unpersist(False)
 
 
+def _local_components(edges: DataFrame) -> DataFrame | None:
+    """Components of a cleaned (u, v) edge table on the driver, or None when
+    it has more than ``_LOCAL_MAX_EDGES`` edges (the collect stops at
+    cap + 1) or its id type does not order like Python values.
+
+    Python compares ``str`` by code point and Spark compares UTF-8 bytes;
+    UTF-8 preserves code-point order, so both ``min`` labels agree. Collated
+    strings and non-integral numbers order differently and take the loop."""
+    t = edges.schema["u"].dataType
+    if t != edges.schema["v"].dataType or not (
+        isinstance(t, IntegralType) or t == StringType()
+    ):
+        return None
+    tbl = edges.limit(_LOCAL_MAX_EDGES + 1).toArrow()
+    if tbl.num_rows > _LOCAL_MAX_EDGES:
+        return None
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(tbl.column("u").to_pylist(), tbl.column("v").to_pylist()):
+        ra = find(parent.setdefault(a, a))
+        rb = find(parent.setdefault(b, b))
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    nodes = list(parent)
+    typ = tbl.schema.field("u").type
+    out = pa.table(
+        {
+            "doc_id": pa.array(nodes, typ),
+            "cluster_id": pa.array([find(n) for n in nodes], typ),
+        }
+    )
+    # same column types and nullability as the loop's groupBy-min output
+    schema = StructType(
+        [StructField("doc_id", t, True), StructField("cluster_id", t, True)]
+    )
+    return edges.sparkSession.createDataFrame(out, schema)
+
+
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 30,
@@ -109,8 +183,12 @@ def connected_components(
     Output: DataFrame(doc_id, cluster_id) for every node appearing in any
             pair; cluster_id = min doc_id of the component.
 
-    One Spark job per ``rounds_per_checkpoint`` star rounds: the eager
-    checkpoint both truncates lineage and carries the convergence
+    Graphs of at most ``_LOCAL_MAX_EDGES`` cleaned edges are solved on the
+    driver (see the module docstring); ``max_iter``, ``rounds_per_checkpoint``
+    and ``checkpoint_dir`` apply only over that cap, to the star loop.
+
+    Star loop: one Spark job per ``rounds_per_checkpoint`` star rounds; the
+    eager checkpoint both truncates lineage and carries the convergence
     checksum as an attached Observation (count + bit_xor of the edge
     hashes — a fixpoint is detected when two consecutive cadences agree;
     the star fixpoint is stable, so batching detects convergence at most
@@ -128,6 +206,21 @@ def connected_components(
     deleting the directory after the returned assignment is consumed.
     """
     from pyspark.sql import Observation
+
+    init = pairs.select(
+        F.col("left_id").alias("u"), F.col("right_id").alias("v")
+    ).where(F.col("u") != F.col("v"))
+    if not input_distinct:
+        # duplicate edges are harmless to the star rounds (min-agg absorbs
+        # them and each round ends in distinct) but inflate round-1 volume;
+        # callers whose pairs are distinct BY CONSTRUCTION (comparison
+        # propagation / lsh_candidates / epsilon_join all end in a pair
+        # distinct or per-pair agg) pass input_distinct=True to skip this
+        # full-edge-table shuffle
+        init = init.distinct()
+    local = _local_components(init)
+    if local is not None:
+        return local
 
     sc = pairs.sparkSession.sparkContext
     restore_ckpt_dir = False
@@ -164,17 +257,6 @@ def connected_components(
 
     held: set[int] = set()
     try:
-        init = pairs.select(
-            F.col("left_id").alias("u"), F.col("right_id").alias("v")
-        ).where(F.col("u") != F.col("v"))
-        if not input_distinct:
-            # duplicate edges are harmless to the star rounds (min-agg absorbs
-            # them and each round ends in distinct) but inflate round-1 volume;
-            # callers whose pairs are distinct BY CONSTRUCTION (comparison
-            # propagation / lsh_candidates / epsilon_join all end in a pair
-            # distinct or per-pair agg) pass input_distinct=True to skip this
-            # full-edge-table shuffle
-            init = init.distinct()
         edges, prev, held = _cut(init, "cc_init", set())
         for i in range(0, max_iter, rounds_per_checkpoint):
             step = edges

@@ -14,6 +14,33 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2 ("max" when unlimited)
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def _default_driver_memory() -> str:
+    """Driver heap used when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of the
+    memory this process may use — the smaller of physical memory and the
+    cgroup limit — and at least 1g. A fixed large heap lets the local-mode
+    JVM grow past a small host's memory and get OOM-killed; half leaves the
+    other half to the Python workers and the OS."""
+    limits = []
+    try:
+        limits.append(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    except (AttributeError, OSError, ValueError):
+        pass
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limits.append(int(f.read().strip()))
+        except (OSError, ValueError):
+            pass
+    if not limits:
+        return "1g"
+    return f"{max(1024, min(limits) // 2 // 2**20)}m"
+
 
 def get_spark(
     app_name: str = "cfb_spark",
@@ -44,7 +71,10 @@ def get_spark(
         # per-batch overhead in the numpy scorers (pair scoring, minhash
         # signatures); 64k keeps a scoring batch ~tens of MB in flight
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )

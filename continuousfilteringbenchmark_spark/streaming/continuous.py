@@ -66,6 +66,12 @@ def incremental_cc_merge(assignment: DataFrame, new_edges: DataFrame) -> DataFra
 
     Only components actually touched by a new edge are relabeled; the rest
     of the table passes through the final join unchanged (null-coalesced).
+
+    The reduced graph has at most one edge per new match edge, so an epoch
+    under ``cluster._LOCAL_MAX_EDGES`` (1M) new edges solves it with the
+    driver-side union-find of ``connected_components`` in one bounded
+    collect, and the relabel table comes back as a local DataFrame the
+    final join can broadcast. Larger epochs run the star loop.
     """
     rep = assignment.select(
         F.col("doc_id").alias("_n"), F.col("cluster_id").alias("_r")

@@ -1,6 +1,10 @@
 """Connected components + evaluators on chain/star/pathological fixtures."""
 
+import random
+import uuid
+
 import pandas as pd
+import pytest
 
 from continuousfilteringbenchmark_spark.eval import (
     canonical_pairs,
@@ -8,10 +12,27 @@ from continuousfilteringbenchmark_spark.eval import (
     evaluate_clusters,
     evaluate_pairs,
 )
+from continuousfilteringbenchmark_spark.operators import cluster
 from continuousfilteringbenchmark_spark.operators.cluster import (
     clusters_with_singletons,
     connected_components,
 )
+
+
+@pytest.fixture
+def star_loop(monkeypatch):
+    """Pin the Spark star loop: with the driver-side cap at 0, every
+    non-empty graph is over it."""
+    monkeypatch.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+
+
+@pytest.fixture
+def star_calls(monkeypatch):
+    """One entry per large-star round run; stays empty on the driver path."""
+    calls = []
+    star = cluster._large_star
+    monkeypatch.setattr(cluster, "_large_star", lambda e: calls.append(1) or star(e))
+    return calls
 
 
 def _pairs(spark, pairs):
@@ -40,12 +61,58 @@ def test_cc_two_components_and_reversed_edges(spark):
     assert m["x"] == "x" and m["y"] == "x"
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_cc_long_chain_converges(spark):
     n = 40
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n)]
     m = _cc_map(spark, edges)
     assert set(m.values()) == {"n000"}
     assert len(m) == n + 1
+
+
+def test_cc_cap_boundary_picks_the_path(spark, monkeypatch, star_calls):
+    """Exactly ``_LOCAL_MAX_EDGES`` cleaned edges run on the driver and one
+    more runs the star loop; a self-loop and an exact duplicate are dropped
+    before the count."""
+    monkeypatch.setattr(cluster, "_LOCAL_MAX_EDGES", 3)
+    at_cap = [("a", "b"), ("b", "c"), ("x", "y"), ("a", "a"), ("a", "b")]
+    assert _cc_map(spark, at_cap) == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    assert not star_calls
+    over_cap = at_cap + [("c", "d")]
+    assert _cc_map(spark, over_cap) == {
+        "a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x",
+    }
+    assert star_calls
+
+
+def test_cc_ids_ordered_unlike_python_take_the_star_loop(spark, star_calls):
+    """Only string and integral ids run on the driver: Python's min agrees
+    with Spark's there, not on NaN or -0.0 doubles or collated strings."""
+    df = spark.createDataFrame([(2.5, 1.5)], "left_id double, right_id double")
+    assert {r.doc_id: r.cluster_id for r in connected_components(df).collect()} == {
+        1.5: 1.5, 2.5: 1.5,
+    }
+    assert star_calls
+
+
+def test_clusters_with_singletons_job_budget(spark):
+    """A ~5k-edge graph clusters in at most 5 Spark jobs, the result collect
+    included; the star loop takes dozens, so a silent fallback to it on
+    small graphs fails here."""
+    rng = random.Random(7)
+    edges = [(f"d{rng.randrange(7000)}", f"d{rng.randrange(7000)}") for _ in range(5000)]
+    docs = spark.createDataFrame([(f"d{i}",) for i in range(7000)], "doc_id string")
+    pairs = _pairs(spark, edges)
+    sc = spark.sparkContext
+    group = f"cc-job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "clusters_with_singletons job budget")
+    try:
+        rows = clusters_with_singletons(docs, pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(rows) == 7000
+    assert len(jobs) <= 5, f"{len(jobs)} Spark jobs"
 
 
 def test_clusters_with_singletons(spark):
@@ -81,6 +148,7 @@ def test_cluster_pairs_and_f1_gate(spark):
     assert m.f1 == 1.0
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_cc_partition_invariance(spark):
     # same result regardless of input partitioning (determinism requirement)
     edges = [(f"e{i}", f"e{(i * 7) % 23}") for i in range(23)]
@@ -91,6 +159,7 @@ def test_cc_partition_invariance(spark):
     assert m1 == m8
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_cc_reliable_checkpoint_mode(spark, tmp_path):
     """checkpoint_dir switches lineage cuts to reliable checkpoints: same
     assignments as local mode, and checkpoint files actually land under the
@@ -113,6 +182,7 @@ def test_cc_reliable_checkpoint_mode(spark, tmp_path):
     assert any("rdd-" in p for p in written), written
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_cc_restores_session_checkpoint_dir(spark, tmp_path):
     """connected_components(checkpoint_dir=...) must not clobber the
     session's configured checkpoint directory — a caller's later
@@ -131,6 +201,7 @@ def test_cc_restores_session_checkpoint_dir(spark, tmp_path):
     assert caller_dir in opt.get()
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_cc_restores_unset_checkpoint_dir(spark, tmp_path):
     """When the caller had NO checkpoint dir configured, the CC scratch dir
     must not stay behind as the session's directory — the docstring tells

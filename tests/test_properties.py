@@ -9,6 +9,8 @@ on random edge sets. Alphabets stay ASCII: the SQL expressions run Java
 regex/locale semantics (``\\W`` is ASCII there, ``toLowerCase`` is
 locale-free for ASCII) and the mirrors replicate exactly that contract —
 exotic-unicode casing is out of the engine's normalization contract.
+The connected-components properties are the exception: they draw non-ASCII
+ids on purpose, since ids are only compared, never normalized.
 
 Spark-bearing properties cap ``max_examples`` (each example is a Spark
 round-trip); the pure-numpy similarity properties run the full default.
@@ -169,25 +171,90 @@ def test_connected_components_matches_union_find(spark, edges):
         assert rep == min(members)
 
 
+# the id pools mix UTF-8 widths 1-4: Spark orders strings by UTF-8 bytes,
+# which is code-point order, so Python's min must pick the same label ("\uffff"
+# sorts before the emoji, unlike Java's UTF-16 compareTo)
+_CC_IDS = {
+    "long": st.one_of(st.integers(-3, 9), st.sampled_from([2**40, -(2**62)])),
+    "string": st.text(
+        alphabet=st.sampled_from(["a", "Z", "é", "中", "\uffff", "😀", "ﬁ"]),
+        max_size=2,
+    ),
+}
+
+
+def _nx_components(edges) -> dict:
+    import networkx as nx
+
+    g = nx.Graph()
+    g.add_edges_from(
+        (a, b) for a, b in edges if a is not None and b is not None and a != b
+    )
+    return {n: min(comp) for comp in nx.connected_components(g) for n in comp}
+
+
+@SPARK_SETTINGS
+@pytest.mark.parametrize("kind", ["long", "string"])
+@given(data=st.data())
+def test_cc_driver_path_equals_star_loop_and_networkx(spark, monkeypatch, kind, data):
+    """The driver-side union-find, the star loop (cap patched to 0) and
+    networkx give the same min-id assignment and the same schema, with
+    self-loops, null endpoints and duplicate edges in the input."""
+    from continuousfilteringbenchmark_spark.operators import cluster
+
+    node = st.one_of(st.none(), _CC_IDS[kind])
+    edges = data.draw(st.lists(st.tuples(node, node), min_size=1, max_size=20))
+    edges += edges[: data.draw(st.integers(0, len(edges)))]  # duplicates
+    df = spark.createDataFrame(edges, f"left_id {kind}, right_id {kind}")
+
+    fast = cluster.connected_components(df)
+    with monkeypatch.context() as m:
+        m.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+        loop = cluster.connected_components(df)
+    assert fast.schema == loop.schema
+    want = _nx_components(edges)
+    assert {r.doc_id: r.cluster_id for r in fast.collect()} == want
+    assert {r.doc_id: r.cluster_id for r in loop.collect()} == want
+
+
 # ------------------------------------------- incremental cluster maintenance
-@settings(
+_FOLD_SETTINGS = settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 14), st.integers(0, 14)).filter(lambda e: e[0] != e[1]),
-        min_size=1,
-        max_size=20,
-    ),
-    n_batches=st.integers(1, 4),
+_FOLD_EDGES = st.lists(
+    st.tuples(st.integers(0, 14), st.integers(0, 14)).filter(lambda e: e[0] != e[1]),
+    min_size=1,
+    max_size=20,
 )
+
+
+@_FOLD_SETTINGS
+@given(edges=_FOLD_EDGES, n_batches=st.integers(1, 4))
 def test_incremental_cc_merge_folds_to_batch_cc(spark, edges, n_batches):
     """Folding any edge stream batch-by-batch through incremental_cc_merge
     (nodes entering as singletons with their first edge) ends at exactly the
     batch connected components of the full edge set — the invariant
     continuous ER relies on, against a union-find oracle."""
+    _check_fold(spark, edges, n_batches)
+
+
+@_FOLD_SETTINGS
+@given(edges=_FOLD_EDGES, n_batches=st.integers(1, 4))
+def test_incremental_cc_merge_folds_to_batch_cc_star_loop(
+    spark, monkeypatch, edges, n_batches
+):
+    """The same fold with every reduced graph over the driver-side cap, so
+    each merge runs the star loop."""
+    from continuousfilteringbenchmark_spark.operators import cluster
+
+    with monkeypatch.context() as m:
+        m.setattr(cluster, "_LOCAL_MAX_EDGES", 0)
+        _check_fold(spark, edges, n_batches)
+
+
+def _check_fold(spark, edges, n_batches):
     from continuousfilteringbenchmark_spark.streaming.continuous import (
         incremental_cc_merge,
     )
