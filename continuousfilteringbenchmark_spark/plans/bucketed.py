@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -68,7 +69,10 @@ _KERNEL_CHUNK = 65536
 
 # per-worker parsed-bucket LRU: python workers are reused across tasks, so
 # a row of grid cells sharing a left bucket pays the read+parse once.
-# 16 entries x (corpus/n) docs stays tens of MB for any sane n.
+# 16 entries x (corpus/n) docs stays tens of MB for any sane n. Keyed by
+# (path, generation, bucket): every write of a store draws a fresh
+# generation, so a store overwritten at the same path never hits the
+# previous content's entries.
 _BUCKET_CACHE_MAX = 16
 _bucket_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
 
@@ -91,7 +95,8 @@ def write_token_buckets(
     before the write puts each bucket's rows in one task, so each bucket
     directory holds one file and a cell task's read is one contiguous
     columnar scan. Returns the meta dict it also persists next to the
-    data (consumed by ``score_pairs_bucketed`` at plan-build time)."""
+    data (consumed by ``score_pairs_bucketed`` at plan-build time); its
+    ``generation`` is a fresh uuid per write, the store's cache identity."""
     hashed = tokened.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         tk.hash_token_set(F.col("tokens")).alias("_h"),
@@ -102,7 +107,7 @@ def write_token_buckets(
         .mode("overwrite")
         .parquet(path)
     )
-    meta = {"n_buckets": int(n_buckets), "version": 1}
+    meta = {"n_buckets": int(n_buckets), "version": 1, "generation": uuid.uuid4().hex}
     with open(os.path.join(path, _META_NAME), "w") as f:
         json.dump(meta, f)
     return meta
@@ -113,14 +118,17 @@ def read_meta(path: str) -> dict:
         return json.load(f)
 
 
-def _load_bucket(path: str, bucket: int, cache_max: int = _BUCKET_CACHE_MAX):
-    """(pd.Index ids, int64 offsets, int64 flat tokens) of one bucket,
-    LRU-cached per worker process. A bucket no doc hashed into has no
-    directory — that is the empty dictionary, not an error."""
+def _load_bucket(
+    path: str, generation: str | None, bucket: int, cache_max: int = _BUCKET_CACHE_MAX
+):
+    """(pd.Index ids, int64 offsets, int64 flat tokens) of one bucket of the
+    store written as ``generation``, LRU-cached per worker process. A
+    bucket no doc hashed into has no directory — that is the empty
+    dictionary, not an error."""
     import numpy as np
     import pandas as pd
 
-    key = (path, bucket)
+    key = (path, generation, bucket)
     hit = _bucket_cache.get(key)
     if hit is not None:
         _bucket_cache.move_to_end(key)
@@ -242,7 +250,9 @@ def score_pairs_bucketed(
     driver collect and no size cap. Output schema and score bits are
     identical to ``score_pairs``'s engines on the same input.
     """
-    n = int(read_meta(bucket_path)["n_buckets"])
+    meta = read_meta(bucket_path)
+    n = int(meta["n_buckets"])
+    generation = meta.get("generation")  # None: a store written without one
     out_schema = "left_id string, right_id string, score double"
     path = bucket_path
     # resolved at PLAN-BUILD time so the values ride into the closure by
@@ -256,8 +266,8 @@ def score_pairs_bucketed(
 
         cell = int(key[0])
         lb, rb = divmod(cell, n)
-        lbuc = _load_bucket(path, lb, cmax)
-        rbuc = lbuc if rb == lb else _load_bucket(path, rb, cmax)
+        lbuc = _load_bucket(path, generation, lb, cmax)
+        rbuc = lbuc if rb == lb else _load_bucket(path, generation, rb, cmax)
         outs = []
         lvals = pdf["left_id"].values
         rvals = pdf["right_id"].values

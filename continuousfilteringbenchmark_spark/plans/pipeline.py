@@ -77,6 +77,10 @@ def _np_set_similarity(c, a, b, kind: str):
 # to force each kernel
 _BITSET_MAX_WORDS = 64
 _BITSET_MAX_BYTES = 256 * 1024 * 1024
+# default broadcast cap in docs: the token dictionary of at most this many
+# docs may be collected to the driver and broadcast (score_pairs'
+# broadcast_rows; materialized_er_pipeline's bucket-store gate)
+_BROADCAST_ROWS = 1_000_000
 # broadcast-dictionary budget in BYTES (8 B per hashed token + per-doc id
 # overhead) — the row-counted cap alone would admit 1M docs x 100 tokens
 # ~ 800+ MB on the driver
@@ -144,6 +148,21 @@ def _token_stats(hashed: DataFrame, cap: int) -> dict:
     while len(_probe_cache) > _PROBE_CACHE_MAX:
         _probe_cache.pop(next(iter(_probe_cache)))
     return stats
+
+
+def _hash_tokens(tokened: DataFrame) -> DataFrame:
+    """(doc_id, _h): the token sets as hashed 64-bit ids, the encoding every
+    score engine reads."""
+    return tokened.select("doc_id", tk.hash_token_set(F.col("tokens")).alias("_h"))
+
+
+def _under_broadcast_cap(hashed: DataFrame, broadcast_rows: int = _BROADCAST_ROWS) -> bool:
+    """The broadcast-cap policy: the hashed token table fits the arrow
+    engine's driver dictionary (at most ``broadcast_rows`` docs and
+    ``_DICT_MAX_BYTES``). Decided on the cached ``_token_stats`` probe, so
+    asking again about the same table costs no job."""
+    stats = _token_stats(hashed, broadcast_rows)
+    return stats["n_docs"] <= broadcast_rows and stats["dict_bytes"] <= _DICT_MAX_BYTES
 
 
 def _score_pairs_arrow(
@@ -326,7 +345,7 @@ def score_pairs(
     pairs: DataFrame,
     tokened: DataFrame,
     sim: str = "jaccard",
-    broadcast_rows: int | None = 1_000_000,
+    broadcast_rows: int | None = _BROADCAST_ROWS,
     engine: str = "auto",
     min_score: float | None = None,
     bucket_path: str | None = None,
@@ -355,9 +374,12 @@ def score_pairs(
       buckets side-band from the ``write_token_buckets`` store — no token
       bytes in any shuffle, no driver collect, no size caps. Requires
       ``bucket_path``.
-    * ``"auto"`` — arrow under the cap; beyond it, bucketed when
-      ``bucket_path`` is given (the production layout always has the
-      stage-store bucket table), else jvm.
+    * ``"auto"`` — arrow under the cap (``_under_broadcast_cap``, the
+      one cap policy, shared with ``plans.stages.materialized_er_pipeline``);
+      beyond it, bucketed when ``bucket_path`` is given, else jvm. The
+      stage-store pipeline commits its bucket table, and passes
+      ``bucket_path``, only when that same test finds the table over the
+      cap, so under the cap no bucket store is written.
 
     ``min_score``: when set, only pairs with score >= min_score are
     returned, and an exact size-bound prefilter (score at c = min(|A|,|B|)
@@ -399,7 +421,7 @@ def score_pairs(
         from .bucketed import score_pairs_bucketed
 
         return score_pairs_bucketed(pairs, bucket_path, sim, min_score=min_score)
-    hashed = tokened.select("doc_id", tk.hash_token_set(F.col("tokens")).alias("_h"))
+    hashed = _hash_tokens(tokened)
 
     hint_broadcast = False
     # explicit engine='arrow' with a cap needs NO separate probe job: the
@@ -409,15 +431,11 @@ def score_pairs(
     if engine == "auto":
         engine = "jvm"
         if broadcast_rows is not None:
-            stats = _token_stats(hashed, broadcast_rows)
-            under = (
-                stats["n_docs"] <= broadcast_rows
-                and stats["dict_bytes"] <= _DICT_MAX_BYTES
-            )
-            hint_broadcast = under
+            hint_broadcast = _under_broadcast_cap(hashed, broadcast_rows)
+            stats = _token_stats(hashed, broadcast_rows)  # the cap test's cached probe
             w_est = (int(stats["v_est"] * 1.2) + 63) // 64
             if (
-                under
+                hint_broadcast
                 and w_est <= _BITSET_MAX_WORDS
                 and stats["n_docs"] * w_est * 8 <= _BITSET_MAX_BYTES
             ):

@@ -12,8 +12,9 @@ cluster)::
 
 The job materializes every stage (tokened -> blocks -> candidate_pairs ->
 matches -> clusters) to ``<output>/<run-id>/<stage>/`` with per-partition
-lineage + metric rows (plans/stages.py). Re-running the same command after a
-failure resumes from the last committed stage; pass a fresh --run-id for a
+lineage + metric rows (plans/stages.py); the printed summary carries each
+stage's rows and wall_ms from those rows. Re-running the same command after
+a failure resumes from the last committed stage; pass a fresh --run-id for a
 clean run. When a local SparkSession already exists (tests), ``main(argv)``
 reuses it instead of building one.
 
@@ -61,6 +62,19 @@ def build_parser() -> argparse.ArgumentParser:
                         "weighting + comparison-cleaning pruner replace "
                         "--builder/--q/--filter-ratio/--no-purge")
     return p
+
+
+def stage_summary(metric_rows) -> dict[str, dict[str, int]]:
+    """{stage: {"rows", "wall_ms"}} of each stage's latest commit, in commit
+    order: a stage re-committed on resume keeps the metrics rows of every
+    commit, so only the rows of its last ``committed_at_ms`` count."""
+    rows = sorted(metric_rows, key=lambda r: r.committed_at_ms)
+    last = {r.stage: r.committed_at_ms for r in rows}
+    out: dict[str, dict[str, int]] = {}
+    for r in rows:
+        if r.committed_at_ms == last[r.stage]:
+            out.setdefault(r.stage, {"rows": 0, "wall_ms": r.wall_ms})["rows"] += r.rows
+    return out
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> dict:
@@ -124,7 +138,12 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
 
     n_clusters = stages["clusters"].select("cluster_id").distinct().count()
     n_docs = stages["clusters"].count()
-    summary = {"run_id": args.run_id, "docs": n_docs, "clusters": n_clusters}
+    summary = {
+        "run_id": args.run_id,
+        "docs": n_docs,
+        "clusters": n_clusters,
+        "stages": stage_summary(store.metrics().collect()),
+    }
 
     if args.gold:
         from continuousfilteringbenchmark_spark.eval import evaluate_clusters

@@ -90,7 +90,7 @@ def run_levels(levels: list[int], path: str) -> dict[int, dict]:
     best = {}
     for n in levels:
         ordered = sorted(runs[n], key=lambda r: r["total_sec"])
-        b = ordered[(len(ordered) - 1) // 2]  # lower median run
+        b = ordered[len(ordered) // 2]  # the median run (REPEATS is odd)
         b["all_totals"] = [r["total_sec"] for r in runs[n]]
         best[n] = b
     return best
@@ -160,6 +160,11 @@ def _write_anchor(n_entities: int, best: dict[int, dict]) -> None:
 
 
 def main() -> None:
+    if REPEATS < 1 or REPEATS % 2 == 0:
+        raise SystemExit(
+            f"SPARK_GRAFT_SCALE_REPEATS={REPEATS}: the reported run is the median "
+            "run, which exists only for an odd number of repeats (1, 3, 5, ...)"
+        )
     n_entities = int(sys.argv[1]) if len(sys.argv) > 1 else 60_000
     data_dir = os.path.join(REPO, "BENCH", "data")
     path = os.path.join(data_dir, f"docs_{n_entities}.parquet")

@@ -107,3 +107,29 @@ def test_score_pairs_dispatch_and_guard(spark, store):
     assert _rows(via_api) == _rows(direct)
     with pytest.raises(ValueError, match="bucket_path"):
         score_pairs(pairs, tokened, engine="bucketed")
+
+
+def test_overwritten_store_is_not_served_stale(spark, tmp_path):
+    """Python workers keep parsed buckets across tasks. A store rewritten at
+    the same path in the same session must be scored from its new tokens:
+    each round overwrites one path with a different token set, and the
+    bucketed scores must equal the jvm engine's. With one bucket every
+    round's single cell task reads bucket 0, so once the rounds outnumber
+    the session's python workers (local[8]) some worker is reused."""
+    path = str(tmp_path / "tokens")
+    pairs = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("b", "c")], "left_id string, right_id string"
+    )
+    for i in range(10):
+        tokened = spark.createDataFrame(
+            [
+                ("a", [f"t{j}" for j in range(i + 1)]),
+                ("b", ["t0"]),
+                ("c", ["t0", "t1", f"u{i}"]),
+            ],
+            "doc_id string, tokens array<string>",
+        )
+        BK.write_token_buckets(tokened, path, n_buckets=1)
+        got = BK.score_pairs_bucketed(pairs, path, "jaccard")
+        jvm = score_pairs(pairs, tokened, "jaccard", engine="jvm")
+        assert _rows(got) == _rows(jvm), f"round {i}"

@@ -32,6 +32,11 @@ def test_run_pipeline_cli_and_resume(spark, tmp_path):
         assert os.path.exists(os.path.join(out, "t1", stage, "_SUCCESS")), stage
     metrics = spark.read.parquet(os.path.join(out, "t1", "_metrics"))
     assert metrics.select("stage").distinct().count() >= 5
+    # the summary's per-stage rows are the committed tables' counts
+    for stage in ["tokened", "blocks", "candidate_pairs", "matches", "clusters"]:
+        got = s1["stages"][stage]
+        assert got["rows"] == spark.read.parquet(os.path.join(out, "t1", stage)).count()
+        assert got["wall_ms"] >= 0
 
     # resume: tamper with the input path — committed stages win, so the rerun
     # must reproduce the identical summary without recomputing from raw input

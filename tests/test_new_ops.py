@@ -107,32 +107,116 @@ def test_streaming_incremental_equals_batch(spark, tmp_path, dirty):
     assert got == want
 
 
-def test_stage_store_resume_and_metrics(spark, tmp_path, dirty):
+_STAGES = {"tokened", "blocks", "candidate_pairs", "matches", "clusters"}
+
+
+def _assert_metric_rows_match_tables(store, stages):
+    """One metrics row per write task: per stage the rows sum to the
+    committed table's count, and the partition ids are distinct and >= 0."""
+    m = store.metrics()
+    assert {r.stage for r in m.select("stage").distinct().collect()} == stages
+    for stage in stages:
+        rows = m.where(F.col("stage") == stage).collect()
+        ids = [r.partition_id for r in rows]
+        assert len(ids) == len(set(ids)) and min(ids) >= 0, (stage, ids)
+        assert sum(r.rows for r in rows) == store.read(stage).count(), stage
+
+
+@pytest.fixture(scope="module")
+def under_cap_run(spark, dirty, tmp_path_factory):
     from continuousfilteringbenchmark_spark.plans.stages import (
         StageStore,
         materialized_er_pipeline,
     )
 
-    store = StageStore(spark, str(tmp_path / "stages"), "run1")
-    res = materialized_er_pipeline(dirty.docs, store, clean_clean=False)
+    store = StageStore(spark, str(tmp_path_factory.mktemp("stages")), "run1")
+    return store, materialized_er_pipeline(dirty.docs, store, clean_clean=False)
+
+
+def test_stage_store_resume_and_metrics(spark, dirty, under_cap_run):
+    from continuousfilteringbenchmark_spark.plans.stages import materialized_er_pipeline
+
+    store, res = under_cap_run
     n_clusters = res["clusters"].count()
     assert store.is_committed("clusters")
 
-    # metrics: one table with a row per (stage, partition), wall_ms recorded
-    m = store.metrics()
-    stages = {r.stage for r in m.select("stage").distinct().collect()}
-    assert stages == {
-        "tokened",
-        "token_buckets",  # r5: write-time bucket(doc_id) co-location stage
-        "blocks",
-        "candidate_pairs",
-        "matches",
-        "clusters",
-    }
-    assert m.where(F.col("rows") < 0).count() == 0
+    # under the broadcast cap scoring takes the arrow engine, so the bucket
+    # store it would never read is not written
+    _assert_metric_rows_match_tables(store, _STAGES)
+    assert not os.path.exists(store._path("token_buckets"))
+    assert store.metrics().where(F.col("wall_ms") < 0).count() == 0
 
     # resume: drop the final stage marker, re-run -> earlier stages are read
     # back (not recomputed), final stage rebuilt, same result
-    os.remove(os.path.join(str(tmp_path / "stages"), "run1", "clusters", "_SUCCESS"))
+    os.remove(os.path.join(store._path("clusters"), "_SUCCESS"))
     res2 = materialized_er_pipeline(dirty.docs, store, clean_clean=False)
     assert res2["clusters"].count() == n_clusters
+
+
+def test_stage_store_over_cap_commits_buckets(spark, dirty, tmp_path, monkeypatch, under_cap_run):
+    """Over the broadcast cap the token_buckets stage is committed, with its
+    metrics rows, and scoring routes to the bucketed engine; the matches
+    equal the under-cap (arrow) run's."""
+    from continuousfilteringbenchmark_spark.plans import bucketed as BK
+    from continuousfilteringbenchmark_spark.plans import pipeline as P
+    from continuousfilteringbenchmark_spark.plans.stages import (
+        StageStore,
+        materialized_er_pipeline,
+    )
+
+    monkeypatch.setattr(P, "_DICT_MAX_BYTES", 0)
+    scored_from = []
+    real = BK.score_pairs_bucketed
+
+    def spy(pairs, bucket_path, *args, **kwargs):
+        scored_from.append(bucket_path)
+        return real(pairs, bucket_path, *args, **kwargs)
+
+    monkeypatch.setattr(BK, "score_pairs_bucketed", spy)
+    store = StageStore(spark, str(tmp_path / "stages"), "over")
+    materialized_er_pipeline(dirty.docs, store, clean_clean=False)
+
+    assert store.is_committed("token_buckets")
+    assert scored_from == [store._path("token_buckets")]
+    _assert_metric_rows_match_tables(store, _STAGES | {"token_buckets"})
+
+    def rows(df):
+        return sorted((r.left_id, r.right_id, r.score) for r in df.collect())
+
+    assert rows(store.read("matches")) == rows(under_cap_run[0].read("matches"))
+
+    # resume with matches committed: the bucket store is neither checked
+    # nor built
+    def unexpected(*args, **kwargs):
+        raise AssertionError("token_buckets touched on resume")
+
+    monkeypatch.setattr(store, "run_token_bucket_stage", unexpected)
+    os.remove(os.path.join(store._path("clusters"), "_SUCCESS"))
+    materialized_er_pipeline(dirty.docs, store, clean_clean=False)
+    assert store.is_committed("clusters")
+
+
+def test_run_stage_job_budget(spark, tmp_path):
+    """A stage commit costs exactly the Spark jobs of its own write: the
+    metrics rows and the read back of the committed table add none."""
+    import uuid
+
+    from continuousfilteringbenchmark_spark.plans.stages import StageStore
+
+    df = spark.range(5000).withColumn("k", F.col("id") % 7).repartition(4, "k")
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"stage-job-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "run_stage job budget")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    direct = jobs(lambda: df.write.parquet(str(tmp_path / "direct")))
+    store = StageStore(spark, str(tmp_path / "stages"), "budget")
+    staged = jobs(lambda: store.run_stage("s", lambda: df))
+    assert direct > 0 and staged == direct
+    _assert_metric_rows_match_tables(store, {"s"})
