@@ -25,6 +25,7 @@ from ..functions import tokenize as tk
 from ..functions.similarity import set_similarity
 from ..operators import blocking as B
 from ..operators.cluster import clusters_with_singletons
+from . import blockplan
 
 
 @dataclass
@@ -504,12 +505,17 @@ def er_pipeline(
     """Run the full pipeline; returns every stage for materialization/tests.
 
     Keys: tokened, blocks, candidate_pairs, matches, clusters.
+
+    Blocks and candidate pairs come from ``plans.blockplan``: the block
+    stats are collected once (under 1M distinct keys) for purging and
+    filtering, and the salt-cap guard is one bounded collect, so building
+    the plan runs those small jobs eagerly.
     """
     cfg = cfg or ERConfig()
     cfg.blocking.clean_clean = clean_clean
     tokened = docs_with_tokens(docs, side_from_prefix=clean_clean)
-    blocks = B.build_blocks(tokened, cfg.blocking)
-    pairs = B.pairs_from_blocks(blocks, clean_clean, salt_threshold=cfg.salt_threshold)
+    blocks = blockplan.build_blocks(tokened, cfg.blocking)
+    pairs = blockplan.pairs_from_blocks(blocks, clean_clean, salt_threshold=cfg.salt_threshold)
     # min_score pushes the threshold into the scorer (exact size-bound
     # prefilter before any intersection work)
     matches = score_pairs(pairs, tokened, cfg.sim, min_score=cfg.threshold)

@@ -187,6 +187,13 @@ def materialized_er_pipeline(
 
     Stage graph: tokened -> blocks -> candidate_pairs -> matches -> clusters.
 
+    The blocks and candidate_pairs stages build through ``plans.blockplan``:
+    one bounded collect of the block stats serves both purging and
+    filtering, and one bounded collect of the keys over the salt cap
+    decides pair emission's guard, which logs a
+    ``pairs_from_blocks__salt_cap_dropped`` metric row only when a key is
+    dropped.
+
     ``reference_config``: a ``configs.ReferenceBlockingConfig`` (one of the
     reference's published tuned operating points, e.g.
     ``configs.from_reference('token_blocking', 'L2', 'D9')``). When given,
@@ -201,8 +208,8 @@ def materialized_er_pipeline(
         docs_with_tokens,
         score_pairs,
     )
-    from ..operators import blocking as B
     from ..operators.cluster import clusters_with_singletons
+    from . import blockplan
 
     cfg = cfg or ERConfig()
     cfg.blocking.clean_clean = clean_clean
@@ -224,10 +231,12 @@ def materialized_er_pipeline(
             ).select("left_id", "right_id"),
         )
     else:
-        blocks = store.run_stage("blocks", lambda: B.build_blocks(tokened, cfg.blocking))
+        blocks = store.run_stage(
+            "blocks", lambda: blockplan.build_blocks(tokened, cfg.blocking)
+        )
         pairs = store.run_stage(
             "candidate_pairs",
-            lambda: B.pairs_from_blocks(
+            lambda: blockplan.pairs_from_blocks(
                 blocks,
                 clean_clean,
                 store=store,

@@ -404,6 +404,26 @@ def _to_batch(rows, schema):
     )
 
 
+def _staging_dir() -> str:
+    """Where converted sources are staged by default: a directory only the
+    current user can write — ``~/.cache``, else a per-user ``0700``
+    directory under the system temp dir."""
+    import tempfile
+
+    for d in (
+        os.path.join(os.path.expanduser("~"), ".cache", "continuousfilteringbenchmark_spark"),
+        os.path.join(tempfile.gettempdir(), f"continuousfilteringbenchmark_spark-{os.getuid()}"),
+    ):
+        try:
+            os.makedirs(d, mode=0o700, exist_ok=True)
+        except OSError:
+            continue
+        st = os.stat(d)
+        if st.st_uid == os.getuid() and os.access(d, os.W_OK):
+            return d
+    raise OSError("no user-private staging directory; pass staging_path")
+
+
 def read_entity_profiles(
     spark, path: str, staging_path: str | None = None, overwrite: bool = False
 ):
@@ -414,19 +434,33 @@ def read_entity_profiles(
     The staged parquet is REUSED when it already exists (pass
     ``overwrite=True`` to force reconversion) — repeated reads must not
     re-pay the driver-side stream parse. ``staging_path`` defaults to a
-    deterministic per-source file under the system temp dir, NOT next to
-    the source: dataset directories are commonly read-only."""
+    file in a user-private directory (``_staging_dir``), NOT next to the
+    source: dataset directories are commonly read-only. The default name is
+    keyed by the source's path, size and mtime, so a modified source is
+    converted again. The conversion writes a temp file in the staging
+    directory and ``os.replace``s it into place, so a reader never sees a
+    half-written file."""
     import hashlib
+    import shutil
     import tempfile
 
     if staging_path is None:
-        digest = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:12]
+        st = os.stat(path)
+        key = f"{os.path.abspath(path)}\0{st.st_size}\0{st.st_mtime_ns}"
+        digest = hashlib.md5(key.encode()).hexdigest()[:12]
         staging_path = os.path.join(
-            tempfile.gettempdir(),
-            f"javaser_{os.path.basename(path)}_{digest}.parquet",
+            _staging_dir(), f"javaser_{os.path.basename(path)}_{digest}.parquet"
         )
     if overwrite or not os.path.exists(staging_path):
-        profiles_to_parquet(path, staging_path)
+        parent = os.path.dirname(os.path.abspath(staging_path))
+        os.makedirs(parent, exist_ok=True)
+        tmp_dir = tempfile.mkdtemp(prefix=".javaser-", dir=parent)
+        try:
+            tmp = os.path.join(tmp_dir, "staged.parquet")
+            profiles_to_parquet(path, tmp)
+            os.replace(tmp, staging_path)
+        finally:
+            shutil.rmtree(tmp_dir, ignore_errors=True)
     return spark.read.parquet(staging_path)
 
 

@@ -19,6 +19,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 
+def corpus_digest(docs) -> tuple[int, str]:
+    """(document count, content digest) of a docs table in one Spark job:
+    ``bit_xor`` of ``xxhash64(doc_id, spans)`` over the rows, as perfbench
+    fingerprints its corpora. Two corpora with the same document count
+    still get different digests."""
+    row = docs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("doc_id", "spans")).alias("h"),
+    ).collect()[0]
+    return int(row["n"]), format((row["h"] or 0) & (2**64 - 1), "016x")
+
+
+def bucket_store_path(root: str, n_docs: int, digest: str, n_buckets: int) -> str:
+    """The token bucket store of one corpus: reused only by a run over the
+    same content, never by another corpus of the same size."""
+    return os.path.join(root, f"tokens_{n_docs}_{digest}_{n_buckets}")
+
+
 def main() -> None:
     path = sys.argv[1]
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -103,7 +121,9 @@ def main() -> None:
         # loading + codegen JIT before the timers (same warm-up every level)
         spark.range(0, 10_000_000, 1, cpus * 2).selectExpr("sum(id)").collect()
     docs = spark.read.parquet(path)
-    n_docs = docs.count()  # warm parquet footers / JVM before the timers
+    # warm parquet footers / JVM before the timers; the digest keys the
+    # bucket store below
+    n_docs, digest = corpus_digest(docs)
 
     timings: dict[str, float] = {}
     counts: dict[str, int] = {}
@@ -148,9 +168,11 @@ def main() -> None:
         n_buckets = int(os.environ.get("SPARK_GRAFT_BUCKETS", "0")) or max(
             8, 2 ** math.ceil(math.log2(max(n_docs / 30000, 1)))
         )
-        bucket_path = os.path.join(
+        bucket_path = bucket_store_path(
             os.environ.get("SPARK_GRAFT_BUCKET_DIR", "/root/spark-buckets"),
-            f"tokens_{n_docs}_{n_buckets}",
+            n_docs,
+            digest,
+            n_buckets,
         )
         t0 = time.perf_counter()
         from continuousfilteringbenchmark_spark.plans.bucketed import (

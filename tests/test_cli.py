@@ -109,3 +109,30 @@ def test_run_continuous_cli_and_restart(spark, tmp_path):
     assert {k: s2[k] for k in ("docs", "clusters")} == {
         k: s1[k] for k in ("docs", "clusters")
     }
+
+
+def test_scale_job_bucket_store_keyed_by_content(spark):
+    """scripts/scale_job.py reuses a token bucket store only for the same
+    corpus content: two corpora with the same document count map to
+    different stores, and one corpus maps to the same store however it is
+    partitioned."""
+    import scale_job
+
+    schema = (
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>"
+    )
+
+    def corpus(words):
+        rows = [(f"d{i}", [("title", w, None, 0)]) for i, w in enumerate(words)]
+        return spark.createDataFrame(rows, schema)
+
+    def store(docs):
+        n_docs, digest = scale_job.corpus_digest(docs)
+        return scale_job.bucket_store_path("/stores", n_docs, digest, 8)
+
+    a = corpus(["alpha beta", "gamma", "delta"])
+    b = corpus(["alpha beta", "gamma", "epsilon"])
+    assert scale_job.corpus_digest(a)[0] == scale_job.corpus_digest(b)[0] == 3
+    assert store(a) != store(b)
+    assert store(a) == store(a.repartition(3)) == store(corpus(["alpha beta", "gamma", "delta"]))

@@ -89,3 +89,42 @@ def test_rejects_non_stream(tmp_path):
     p.write_bytes(b"\x00\x01\x02\x03")
     with pytest.raises(ValueError, match="not a Java serialization stream"):
         javaser.read_profiles_file(str(p))
+
+
+def test_modified_source_is_converted_again(spark, tmp_path, monkeypatch):
+    """The default staging name is keyed by the source's size and mtime, not
+    its path alone: an unchanged source reuses its staged parquet, a
+    modified one is converted again, and no temp file is left behind."""
+    import shutil
+
+    stage_dir = tmp_path / "stage"
+    stage_dir.mkdir()
+    monkeypatch.setattr(javaser, "_staging_dir", lambda: str(stage_dir))
+    converted = []
+    real = javaser.profiles_to_parquet
+
+    def spy(path, out_path, *args, **kwargs):
+        converted.append(path)
+        return real(path, out_path, *args, **kwargs)
+
+    monkeypatch.setattr(javaser, "profiles_to_parquet", spy)
+    src = tmp_path / "profiles.ser"
+    shutil.copy(PROFILES, src)
+
+    assert javaser.read_entity_profiles(spark, str(src)).count() == 4
+    assert javaser.read_entity_profiles(spark, str(src)).count() == 4
+    assert len(converted) == 1
+
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert javaser.read_entity_profiles(spark, str(src)).count() == 4
+    assert len(converted) == 2
+    assert sorted(p.name.startswith("javaser_") for p in stage_dir.iterdir()) == [True, True]
+
+
+def test_default_staging_dir_is_user_private(tmp_path, monkeypatch):
+    monkeypatch.setenv("HOME", str(tmp_path))
+    d = javaser._staging_dir()
+    assert d.startswith(str(tmp_path))
+    st = os.stat(d)
+    assert st.st_uid == os.getuid() and not st.st_mode & 0o022
