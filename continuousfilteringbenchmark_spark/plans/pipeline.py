@@ -506,10 +506,10 @@ def er_pipeline(
 
     Keys: tokened, blocks, candidate_pairs, matches, clusters.
 
-    Blocks and candidate pairs come from ``plans.blockplan``: the block
-    stats are collected once (under 1M distinct keys) for purging and
-    filtering, and the salt-cap guard is one bounded collect, so building
-    the plan runs those small jobs eagerly.
+    Blocks and candidate pairs come from ``plans.blockplan``: under 1M
+    postings and 1M emitted pairs they are computed on the driver, and past
+    that the block stats are collected once for purging and filtering, so
+    building the plan runs those bounded collects eagerly.
     """
     cfg = cfg or ERConfig()
     cfg.blocking.clean_clean = clean_clean

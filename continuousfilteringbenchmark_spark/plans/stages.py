@@ -188,9 +188,9 @@ def materialized_er_pipeline(
     Stage graph: tokened -> blocks -> candidate_pairs -> matches -> clusters.
 
     The blocks and candidate_pairs stages build through ``plans.blockplan``:
-    one bounded collect of the block stats serves both purging and
-    filtering, and one bounded collect of the keys over the salt cap
-    decides pair emission's guard, which logs a
+    under 1M postings and 1M emitted pairs both are computed on the driver
+    from one bounded collect each, and past that the block stats are
+    collected once for purging and filtering. Pair emission logs a
     ``pairs_from_blocks__salt_cap_dropped`` metric row only when a key is
     dropped.
 
@@ -257,9 +257,16 @@ def materialized_er_pipeline(
         )
 
     matches = store.run_stage("matches", build_matches)
+    # comparison propagation ends in a pair distinct and scoring emits at
+    # most one row per pair; the reference pruners' output is not known to
+    # be distinct
     clusters = store.run_stage(
         "clusters",
-        lambda: clusters_with_singletons(docs, matches.select("left_id", "right_id")),
+        lambda: clusters_with_singletons(
+            docs,
+            matches.select("left_id", "right_id"),
+            input_distinct=reference_config is None,
+        ),
     )
     return {
         "tokened": tokened,
